@@ -47,8 +47,10 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
+from ner_spark.session import DEFAULT_CPUS  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = DEFAULT_CPUS
 # 2700 leaves ~900 s of headroom under a 1 h outer timeout even if the
 # 4M-file corpus must be re-materialized (fresh /tmp) — the full
 # everything-enabled pass measured 3920 s at budget 7200, and phases

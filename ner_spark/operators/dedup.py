@@ -46,16 +46,6 @@ def minhash_signature(col, k: int = 5, num_hashes: int = 12) -> Column:
     )
 
 
-def lsh_band_hashes(sig_col: Column, bands: int, rows_per_band: int) -> Column:
-    """array<string>[bands]: band i = md5(concat of its signature rows)."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda i: F.md5(
-            F.concat_ws("|", F.slice(sig_col, i * rows_per_band + 1, rows_per_band))
-        ),
-    )
-
-
 def minhash_signature_df(
     docs: DataFrame,
     id_col: str = "doc_id",

@@ -5,17 +5,30 @@ contract (BASELINE.json north_star):
   - entity COOCCURS  entity      (within-file co-occurrence, e1 < e2)
   - file   DECLARES  symbol      (lang-aware declaration regexes)
 
-All three are native DataFrame plans. COOCCURS is the one real
-self-join; it joins *distinct per-file entity sets* (tiny vs the token
-stream) on file_key — AQE skew-join handles a mega-file, and the
-pair-count per file is bounded by (entities-per-file choose 2), not by
-file size.
+All three families come from one per-file extractor
+(``mentions._extractor``: gazetteer entities plus ``DECL_RE`` symbols)
+through one of its two emitters:
+
+  - ``triples_direct`` fuses extraction and triple emission in one
+    ``mapInPandas`` pass, then one global distinct (``extract_triples``,
+    the stream, the DuckDB-gated KG queries);
+  - ``mentions.file_profiles`` writes one profile row per file, and
+    ``all_triples_from_profiles`` derives the families from it with
+    array explodes (the resumable checkpointed job).
+
+``calls_triples`` and ``imports_triples`` are separate families: native
+``regexp_extract_all`` plans over their own regexes.
 """
 
 from __future__ import annotations
 
+import itertools
+
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ner_spark.operators.mentions import _extractor
 
 # shared with synth.golden_triples_for_file and the DuckDB oracles
 DECL_RE = r"(?m)^(?:def|class|func|void|public\s+\w+)\s+([A-Za-z_][A-Za-z0-9_]*)"
@@ -30,49 +43,6 @@ CALL_RE = r"([A-Za-z_][A-Za-z0-9_]*)\s*\("
 
 # import header: `import x` / `from x import y` — captures the module
 IMPORT_RE = r"(?m)^(?:import|from)\s+([A-Za-z_][A-Za-z0-9_.]*)"
-
-
-def contains_triples(mentions: DataFrame, files_meta: DataFrame) -> DataFrame:
-    """repo CONTAINS entity (distinct). `files_meta` = (file_key, repo)."""
-    return (
-        mentions.select("file_key", "entity")
-        .join(files_meta.select("file_key", "repo"), "file_key")
-        .select(F.col("repo").alias("subj"), F.lit("CONTAINS").alias("pred"), F.col("entity").alias("obj"))
-        .distinct()
-    )
-
-
-def cooccurs_triples(mentions: DataFrame) -> DataFrame:
-    """entity COOCCURS entity within one file, ordered pairs e1 < e2."""
-    fe = mentions.select("file_key", "entity").distinct()
-    a = fe.alias("a")
-    b = fe.alias("b")
-    return (
-        a.join(b, (F.col("a.file_key") == F.col("b.file_key")) & (F.col("a.entity") < F.col("b.entity")))
-        .select(
-            F.col("a.entity").alias("subj"),
-            F.lit("COOCCURS").alias("pred"),
-            F.col("b.entity").alias("obj"),
-        )
-        .distinct()
-    )
-
-
-def declares_triples(files: DataFrame, key_col: str = "file_key",
-                     content_col: str = "content") -> DataFrame:
-    """file DECLARES symbol — native regexp_extract_all + explode.
-
-    Stays entirely in the JVM; the scan reads only (repo, path,
-    content) and Catalyst prunes the rest.
-    """
-    return (
-        files.select(
-            F.concat_ws("/", "repo", "path").alias("subj"),
-            F.explode(F.regexp_extract_all(F.col(content_col), F.lit(DECL_RE), 1)).alias("obj"),
-        )
-        .select("subj", F.lit("DECLARES").alias("pred"), "obj")
-        .distinct()
-    )
 
 
 def calls_triples(files: DataFrame, content_col: str = "content") -> DataFrame:
@@ -99,8 +69,8 @@ def calls_triples(files: DataFrame, content_col: str = "content") -> DataFrame:
 
 def imports_triples(files: DataFrame, content_col: str = "content") -> DataFrame:
     """file IMPORTS module — dependency-edge extraction from import
-    headers (`import x` / `from x import y`). Same shape as
-    declares_triples: native regexp_extract_all + explode + distinct.
+    headers (`import x` / `from x import y`): native
+    regexp_extract_all + explode + distinct.
     """
     return (
         files.select(
@@ -114,20 +84,10 @@ def imports_triples(files: DataFrame, content_col: str = "content") -> DataFrame
     )
 
 
-def all_triples(files: DataFrame, mentions: DataFrame) -> DataFrame:
-    """Union of the three triple families, stable column order."""
-    meta = files.select("file_key", "repo")
-    return (
-        contains_triples(mentions, meta)
-        .unionByName(cooccurs_triples(mentions))
-        .unionByName(declares_triples(files))
-    )
-
-
 # ---------------------------------------------------------------------------
-# profile-based derivations (the fast path): all three families from
-# the single-pass (file_key, repo, entities, symbols) table — pure
-# array explodes + distinct, no content re-scan, no self-join.
+# profile-based derivations (the checkpointed job): all three families
+# from the file_profiles table — pure array explodes + distinct, no
+# content re-scan, no self-join.
 # ---------------------------------------------------------------------------
 
 def contains_from_profiles(profiles: DataFrame) -> DataFrame:
@@ -185,12 +145,12 @@ def triples_direct(
 ) -> DataFrame:
     """(subj, pred, obj) straight out of the single content pass.
 
-    ONE fused Python kernel per batch emits batch-locally-deduped
-    CONTAINS/COOCCURS sets plus per-file-deduped DECLARES symbols; one
-    global distinct dedupes across partitions with map-side partial
-    aggregation. At 100 TB this is one scan and one exchange whose
-    input is the batch-distinct triple stream, far below the token
-    stream.
+    The triple emitter of ``mentions._extractor``: per batch it emits
+    batch-locally-deduped CONTAINS/COOCCURS sets plus per-file-deduped
+    DECLARES symbols; one global distinct dedupes across partitions
+    with map-side partial aggregation. At 100 TB this is one scan and
+    one exchange whose input is the batch-distinct triple stream, far
+    below the token stream.
 
     Alternatives measured and rejected on this box (8M-file corpus,
     local[32]): split entity/declaration kernels (second content scan
@@ -198,44 +158,21 @@ def triples_direct(
     and persist-then-split-distinct (cache write/read of the triple
     stream outweighed the exchange it avoided: 28.7s).
     """
-    import itertools
-    import re as _re
-
-    import pandas as _pd
-
-    from ner_spark.operators.mentions import _automaton
-
     gaz = tuple(sorted(gazetteer))
-    dre = _re.compile(decl_re, _re.M)
-    # when every gazetteer alias is a single [A-Za-z0-9_]+ identifier,
-    # "boundary-anchored alias match" == "alias appears as a maximal
-    # token run": one cheap token findall + a set intersection replaces
-    # the 86-way alternation scan (measured 1.85x on the matching step,
-    # 1.44x end-to-end at the 16-core probe, output verified identical
-    # triple-for-triple on the 4M-file corpus). Aliases with other
-    # characters fall back to the automaton; mention_spans always keeps
-    # it — spans need positions, this kernel only needs the set.
-    token_mode = all(_re.fullmatch(r"[A-Za-z0-9_]+", a) for a, _, _ in gaz)
-    tok_re = _re.compile(r"[A-Za-z0-9_]+")
 
     def run(batches):
-        pat, alias_map = _automaton(gaz)
-        alias_keys = frozenset(alias_map)
+        extract = _extractor(gaz, decl_re)
         for pdf in batches:
             contains: set[tuple[str, str]] = set()
             cooccurs: set[tuple[str, str]] = set()
             subjs, preds, objs = [], [], []
             for key, repo, text in zip(pdf[key_col], pdf["repo"], pdf[content_col]):
-                if token_mode:
-                    hit = set(tok_re.findall(text)).intersection(alias_keys)
-                else:
-                    hit = {m.group(1) for m in pat.finditer(text)}
-                ents = sorted({alias_map[t][0] for t in hit})
+                ents, syms = extract(text)
                 for e in ents:
                     contains.add((repo, e))
                 for pair in itertools.combinations(ents, 2):
                     cooccurs.add(pair)
-                for sym in sorted({m.group(1) for m in dre.finditer(text)}):
+                for sym in syms:
                     subjs.append(key)
                     preds.append("DECLARES")
                     objs.append(sym)
@@ -247,7 +184,7 @@ def triples_direct(
                 subjs.append(a)
                 preds.append("COOCCURS")
                 objs.append(b)
-            yield _pd.DataFrame({"subj": subjs, "pred": preds, "obj": objs})
+            yield pd.DataFrame({"subj": subjs, "pred": preds, "obj": objs})
 
     raw = files.select(F.col(key_col), F.col("repo"), F.col(content_col)).mapInPandas(
         run, TRIPLE_SCHEMA

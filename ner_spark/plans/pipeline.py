@@ -1,10 +1,13 @@
-"""End-to-end KG pipeline: files -> mentions -> (link/canonicalize) -> triples.
+"""End-to-end KG pipeline: files -> gazetteer mentions + declarations -> triples.
 
-The flagship lifecycle (SURVEY §3.3's serving path, re-expressed):
-one scan, one mapInPandas (mention automaton), one broadcast join, one
-self-join, all planned by Catalyst. `file_key` is content-derived
-(repo/path) — never monotonically_increasing_id — so results are
-identical at any parallelism (north-rule determinism).
+``extract_triples`` is the one triple plan: one scan, one
+``mapInPandas`` pass of the shared per-file extractor
+(``mentions._extractor`` via ``triples.triples_direct``), one global
+distinct. The entry point, the stream and the DuckDB-gated KG queries
+all run it; the checkpointed job (plans/checkpoint.py) runs the same
+extractor through its profile emitter instead. `file_key` is
+content-derived (repo/path) — never monotonically_increasing_id — so
+results are identical at any parallelism (north-rule determinism).
 """
 
 from __future__ import annotations
@@ -14,13 +17,7 @@ from pyspark.sql import functions as F
 
 from ner_spark import synth
 from ner_spark.functions.text import content_sha256
-from ner_spark.operators.mentions import file_profiles, mention_spans  # noqa: F401
-from ner_spark.operators.triples import (  # noqa: F401
-    DECL_RE,
-    all_triples,
-    all_triples_from_profiles,
-    triples_direct,
-)
+from ner_spark.operators.triples import DECL_RE, triples_direct
 
 
 def with_file_key(files: DataFrame) -> DataFrame:
@@ -37,70 +34,19 @@ def extract_triples(
     """files(repo,path,commit,lang,content) -> distinct (subj,pred,obj).
 
     Physical shape (the minimal plan): ONE mapInPandas pass over
-    `content` emits all three triple families (gazetteer automaton +
-    declaration regex fused — python `re` beats the JVM regex ~3x on
-    this workload), then ONE distinct shuffle dedupes globally with
-    map-side partial aggregation. The 100 TB content column is scanned
-    exactly once and the only exchanged data is the near-distinct
-    triple stream.
+    `content` emits all three triple families (gazetteer match +
+    declaration regex fused), then ONE distinct shuffle dedupes
+    globally with map-side partial aggregation. The 100 TB content
+    column is scanned exactly once and the only exchanged data is the
+    near-distinct triple stream. A null `content` contributes nothing.
 
-    The two-stage profile variant (file_profiles ->
-    all_triples_from_profiles) remains for the resumable pipeline,
-    where the profile parquet is the checkpoint boundary
-    (plans/checkpoint.py).
+    The resumable job runs the same extractor through its profile
+    emitter (file_profiles -> all_triples_from_profiles), where the
+    profile parquet is the checkpoint boundary (plans/checkpoint.py).
     """
     gaz = gazetteer if gazetteer is not None else synth.gazetteer_rows()
     keyed = with_file_key(files)
     return triples_direct(keyed, gaz, DECL_RE)
-
-
-def extract_triples_linked(
-    files: DataFrame,
-    gazetteer: list[tuple[str, str, str]] | None = None,
-    min_sim: float = 0.5,
-) -> DataFrame:
-    """Full north-star flow: exact triples + fuzzy entity linking.
-
-    Tokens that match no gazetteer alias exactly are scored against the
-    broadcast alias dictionary with char-3-gram similarity
-    (operators/linking.link_surfaces); confident links (>= min_sim,
-    non-NIL) contribute additional repo-CONTAINS-entity triples — the
-    typo/morphological-variant recall path. COOCCURS/DECLARES stay
-    exact (a fuzzy co-occurrence would compound two uncertain links).
-
-    Scale shape: the candidate set is the *distinct unmatched
-    vocabulary*, not the token stream — bounded by vocabulary size, so
-    the similarity join is dictionary-sized no matter how large the
-    corpus.
-    """
-    from ner_spark.functions.text import tokens as tok_expr
-    from ner_spark.operators.linking import link_surfaces
-
-    gaz = gazetteer if gazetteer is not None else synth.gazetteer_rows()
-    keyed = with_file_key(files)
-    exact = triples_direct(keyed, gaz, DECL_RE)
-
-    spark = files.sparkSession
-    gaz_df = spark.createDataFrame(gaz, "alias string, entity string, ent_type string")
-    surf = keyed.select(
-        "repo", F.explode(tok_expr("content")).alias("surface")
-    ).distinct()
-    unmatched = surf.join(
-        F.broadcast(gaz_df.select(F.col("alias").alias("surface"))), "surface", "left_anti"
-    )
-    links = link_surfaces(
-        unmatched.select("surface").distinct(), gaz_df, min_sim=min_sim
-    ).filter(F.col("entity") != "NIL")
-    fuzzy = (
-        unmatched.join(F.broadcast(links), "surface")
-        .select(
-            F.col("repo").alias("subj"),
-            F.lit("CONTAINS").alias("pred"),
-            F.col("entity").alias("obj"),
-        )
-        .distinct()
-    )
-    return exact.unionByName(fuzzy).distinct()
 
 
 def run_synthetic(spark: SparkSession, sf: float = 0.001) -> DataFrame:

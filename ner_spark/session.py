@@ -13,7 +13,17 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# Sized from the machine; SPARK_GRAFT_CPUS / SPARK_GRAFT_DRIVER_MEM override.
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def _default_driver_mem() -> str:
+    """A quarter of MemTotal, capped at 20g: the heap is pre-touched
+    (-Xms = -Xmx, AlwaysPreTouch), so it must fit beside the Python
+    workers and everything else on the host."""
+    with open("/proc/meminfo") as f:
+        total_kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    return f"{min(total_kb // 4096, 20 * 1024)}m"
 
 
 def get_spark(
@@ -30,6 +40,7 @@ def get_spark(
     stage on a real cluster.
     """
     cpus = cpus or DEFAULT_CPUS
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem()
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
     b = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -44,7 +55,7 @@ def get_spark(
         # large `content` strings: keep Arrow batches bounded so the
         # Python workers never hold more than ~batch rows of file text
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "20g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         # Fixed, pre-touched heap: without it, G1 grows the heap under
         # load and every young GC triggers kernel page-commit storms
@@ -56,10 +67,7 @@ def get_spark(
         .config(
             "spark.driver.extraJavaOptions",
             "-Dio.netty.tryReflectionSetAccessible=true "
-            + os.environ.get(
-                "SPARK_GRAFT_XMS",
-                "-Xms" + os.environ.get("SPARK_GRAFT_DRIVER_MEM", "20g"),
-            )
+            + os.environ.get("SPARK_GRAFT_XMS", "-Xms" + driver_mem)
             + " -XX:+AlwaysPreTouch",
         )
         .config("spark.python.worker.faulthandler.enabled", "true")

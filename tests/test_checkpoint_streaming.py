@@ -30,6 +30,7 @@ def test_checkpoint_resume_skips_completed_stages(spark, tmp_path):
 
     t1 = run_kg_checkpointed(spark, files_path, root)
     first = {tuple(r) for r in t1.collect()}
+    assert first == synth.golden_triples(40)
     man = json.loads((Path(root) / "profiles" / "manifest.json").read_text())
     assert man["status"] == "complete"
     assert man["rows_out"] == 40

@@ -4,11 +4,15 @@ row invariant, and parallelism-invariance."""
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import functions as F
 
 from ner_spark import synth
-from ner_spark.operators.mentions import bio_tags_for_files, detect_mentions_join, mention_spans
+from ner_spark.operators.mentions import bio_tags_for_files, file_profiles, mention_spans
+from ner_spark.operators.triples import DECL_RE, all_triples_from_profiles
 from ner_spark.plans import pipeline
+from ner_spark.plans.checkpoint import run_kg_checkpointed
 
 N_FILES = 60
 
@@ -55,20 +59,51 @@ def test_mention_spans_word_boundaries(spark):
     assert sorted((r["begin"], r["end"]) for r in got) == [(6, 8), (18, 20)]
 
 
-def test_join_and_automaton_strategies_agree(spark):
-    """Single-token gazetteer: broadcast-join path == automaton path."""
+def test_non_identifier_alias_reaches_automaton(spark):
+    """An alias outside [A-Za-z0-9_]+ switches the extractor to the
+    automaton; both emitters still find it as a whole word."""
+    gaz = [("c++", "cpp", "LANG"), ("numpy", "numpy", "LIB")]
+    files = spark.createDataFrame(
+        [("r", "a.cpp", "c", "cpp", "// c++ bindings for numpy\nclass Arr:\n  pass\n"),
+         ("r", "b.cpp", "c", "cpp", "xc++ c++x numpy\n")],
+        synth.FILES_SCHEMA,
+    )
+    want = {
+        ("r", "CONTAINS", "cpp"),
+        ("r", "CONTAINS", "numpy"),
+        ("cpp", "COOCCURS", "numpy"),
+        ("r/a.cpp", "DECLARES", "Arr"),
+    }
+    assert {tuple(r) for r in pipeline.extract_triples(files, gaz).collect()} == want
+    profiles = file_profiles(pipeline.with_file_key(files), gaz, DECL_RE)
+    assert {r["file_key"]: r["entities"] for r in profiles.collect()} == {
+        "r/a.cpp": ["cpp", "numpy"],
+        "r/b.cpp": ["numpy"],
+    }
+    assert {tuple(r) for r in all_triples_from_profiles(profiles).collect()} == want
+
+
+def test_automaton_and_token_modes_agree(spark):
+    """Synth files: the token path (all-identifier gazetteer) and the
+    automaton path (forced by one non-identifier alias that matches
+    nothing) give the same per-file entity sets, and so do the spans."""
     keyed = pipeline.with_file_key(_files(spark))
-    gaz_rows = synth.gazetteer_rows()
-    gaz_df = synth.gazetteer_df(spark)
-    a = {
-        (r["file_key"], r["entity"])
-        for r in detect_mentions_join(keyed, gaz_df).select("file_key", "entity").distinct().collect()
-    }
-    b = {
-        (r["file_key"], r["entity"])
-        for r in mention_spans(keyed, gaz_rows).select("file_key", "entity").distinct().collect()
-    }
-    assert a == b
+    gaz = synth.gazetteer_rows()
+
+    def entity_sets(rows):
+        return {(r["file_key"], tuple(r["entities"])) for r in rows if r["entities"]}
+
+    token = entity_sets(file_profiles(keyed, gaz, DECL_RE).collect())
+    automaton = entity_sets(
+        file_profiles(keyed, gaz + [("no+such+alias", "nothing", "X")], DECL_RE).collect()
+    )
+    spans = (
+        mention_spans(keyed, gaz)
+        .groupBy("file_key")
+        .agg(F.array_sort(F.collect_set("entity")).alias("entities"))
+        .collect()
+    )
+    assert token and token == automaton == entity_sets(spans)
 
 
 def test_bio_tags_validity_and_alignment(spark):
@@ -108,35 +143,49 @@ def test_triples_match_golden_oracle(spark):
 
 
 def test_triples_parallelism_invariant(spark):
-    t2 = {
-        tuple(r) for r in pipeline.extract_triples(_files(spark, 40, 2)).collect()
-    }
-    t8 = {
-        tuple(r) for r in pipeline.extract_triples(_files(spark, 40, 8)).collect()
-    }
-    assert t2 == t8
-
-
-def test_linked_pipeline_recovers_typo_mentions(spark):
-    """extract_triples_linked: a typo'd alias ('tensorfow') yields the
-    CONTAINS triple the exact automaton misses; junk identifiers stay
-    NIL; exact triples are unchanged."""
-    files = spark.createDataFrame(
-        [
-            ("r1", "a.py", "c", "python", "import tensorfow\ndef f_1(x):\n    return x\n"),
-            ("r2", "b.py", "c", "python", "import numpy\nVALUE_7 = 3\n"),
-        ],
-        synth.FILES_SCHEMA,
+    t1, t2, t8 = (
+        {tuple(r) for r in pipeline.extract_triples(_files(spark, 40, parts)).collect()}
+        for parts in (1, 2, 8)
     )
-    exact = {tuple(r) for r in pipeline.extract_triples(files).collect()}
-    linked = {tuple(r) for r in pipeline.extract_triples_linked(files).collect()}
-    assert ("r1", "CONTAINS", "tensorflow") not in exact
-    assert ("r1", "CONTAINS", "tensorflow") in linked
-    assert ("r2", "CONTAINS", "numpy") in exact
-    assert exact <= linked
-    # junk identifiers must not link: the only additions are real recoveries
-    extras = linked - exact
-    assert extras == {("r1", "CONTAINS", "tensorflow")}
+    assert t1 == t2 == t8
+
+
+HOSTILE_SCHEMA = "repo string, path string, commit string, lang string, content string"
+
+
+def test_hostile_content_completes(spark, tmp_path):
+    """Null, empty, CJK-around-alias and >1 MB content: the fused plan
+    and the checkpointed job both complete, every file gets a profile,
+    and a null row contributes no triples."""
+    big = "import torch\n" + "x = 1\n" * 200_000 + "def big_fn():\n    pass\n"
+    assert len(big) > 1_000_000
+    rows = [
+        ("r1", "null.py", "c", "python", None),
+        ("r1", "empty.py", "c", "python", ""),
+        ("r2", "cjk.py", "c", "python", "使用numpy和pandas\ndef run():\n    pass\n"),
+        ("r3", "big.py", "c", "python", big),
+    ]
+    files = spark.createDataFrame(rows, HOSTILE_SCHEMA)
+    want = {
+        tuple(r)
+        for r in pipeline.extract_triples(files.filter(F.col("content").isNotNull())).collect()
+    }
+    assert {
+        ("r2", "CONTAINS", "numpy"),
+        ("numpy", "COOCCURS", "pandas"),
+        ("r2/cjk.py", "DECLARES", "run"),
+        ("r3", "CONTAINS", "pytorch"),
+        ("r3/big.py", "DECLARES", "big_fn"),
+    } <= want
+    assert {tuple(r) for r in pipeline.extract_triples(files).collect()} == want
+
+    files_path = str(tmp_path / "files.parquet")
+    files.write.parquet(files_path)
+    root = tmp_path / "ckpt"
+    got = {tuple(r) for r in run_kg_checkpointed(spark, files_path, str(root)).collect()}
+    assert got == want
+    man = json.loads((root / "profiles" / "manifest.json").read_text())
+    assert man["rows_out"] == len(rows)
 
 
 def test_entry_contract(spark):

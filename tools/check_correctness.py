@@ -114,7 +114,7 @@ def main() -> int:
             workers = int(a.split("=", 1)[1])
         else:
             only.append(a)
-    spark = get_spark("correctness", cpus=32 if workers > 1 else 16)
+    spark = get_spark("correctness")
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()

@@ -147,9 +147,9 @@ def main() -> None:
         return
     import bench
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    from ner_spark.session import get_spark
+    from ner_spark.session import DEFAULT_CPUS, get_spark
 
+    cpus = DEFAULT_CPUS
     spark = get_spark("resume_demo_synth", cpus=cpus)
     files_path = bench._materialize_files(spark, bench.SCALE_FILES)
     spark.stop()
